@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -50,4 +50,11 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** Deterministic 32-byte synthetic pubkey for the integer SQL
+    * expression `e`: md5(e) ‖ md5(e + 1) over the decimal strings — the
+    * bytes the DuckDB oracles build as `md5(...) || md5(...)`. */
+  def pubkey(e: String): Column =
+    expr(s"unhex(concat(md5(cast(cast($e as string) as binary)), " +
+      s"md5(cast(cast(($e) + 1 as string) as binary))))")
 }

@@ -1,26 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tools.DumpOracles
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // memory-sink Complete-mode results collect to the driver; the
-      // sf10 session table overflows the 1g default and the sf100 one
-      // brushes 8g (oracle surface only — production streams write to
-      // real sinks, never memory)
-      .config("spark.driver.maxResultSize", "16g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.harness()
     new java.io.File(outDir).mkdirs()
     // run queries on a small pool: per-query wall time is dominated by
     // job-scheduling overhead on these small inputs, and Spark happily
@@ -65,36 +51,15 @@ object Verify {
             // the exception text instead of a silent absentee
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
             val msg = s"${e.getClass.getName}: ${String.valueOf(e.getMessage)}"
-            val esc = msg.flatMap {
-              case '"' => "\\\""
-              case '\\' => "\\\\"
-              case c if c < ' ' => f"\\u${c.toInt}%04x"
-              case c => c.toString
-            }
             scala.util.Try(Files.writeString(
               Paths.get(s"$outDir/${name}_FAILED.json"),
-              s"""{"query":"$name","error":"$esc"}"""))
+              DumpOracles.jsonObject(Seq("query" -> name, "error" -> msg))))
           }
       })
     }
     tasks.foreach(_.get())
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    DumpOracles.write(s"$outDir/oracle_sql.json", only)
     spark.stop()
   }
 }

@@ -574,12 +574,14 @@ object Dedup {
     * of documents sharing ≥ `minShared` fingerprints, scored by
     * shared / min(|fp₁|, |fp₂|) in exact parts-per-million.
     *
-    * The rightmost-tie selection is encoded branch-free: the windowed
-    * min runs over `struct(hash, −pos)` — struct ordering compares
-    * field by field, so the order is (hash asc, pos desc), the same
-    * selection as a `hash ‖ lpad(10⁹ − pos)` string min but without
-    * building a 41-char string per window row — one window pass, both
-    * engines agree exactly.
+    * Fingerprints come from the compiled `graft_winnow_fps` kernel
+    * ([[graft.functions.TextOps.winnowFps]]), one pass per document: it
+    * md5-hashes every k-gram, then for each window of `w` positions
+    * scans right-to-left and replaces the candidate only on a strictly
+    * smaller digest, so the rightmost minimum wins ties. A position
+    * selected by consecutive windows is emitted once, and the distinct
+    * hex digests come back sorted. Round11OpsSpec pins the kernel
+    * against the DataFrame window formulation it replaced.
     *
     * Scale shape: identical texts collapse to a representative FIRST
     * (one md5 group-by), so fingerprinting and the pair join cost ∝

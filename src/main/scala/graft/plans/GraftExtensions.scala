@@ -19,42 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("graft_base58", args = 1,
-      es => Base58Encode(es.head)))
-    ext.injectFunction(fn("graft_unbase58", args = 1,
-      es => Base58Decode(es.head)))
-    ext.injectFunction(fn("graft_le_long", args = 2,
-      es => LeLong(es(0), es(1))))
-    ext.injectFunction(fn("graft_le_int", args = 2,
-      es => LeInt(es(0), es(1))))
-    ext.injectFunction(fn("graft_le_bytes", args = 2,
-      es => LeBytes(es(0), es(1))))
-    ext.injectFunction(fn("graft_le_u128", args = 2,
-      es => LeU128(es(0), es(1))))
-    ext.injectFunction(fn("graft_rolling_min", args = 2,
-      es => RollingHashMin(es(0), es(1))))
-    ext.injectFunction(fn("graft_nop", args = 1, es => GraftNop(es.head)))
-    ext.injectFunction(fn("graft_trigrams", args = 1,
-      es => Trigrams(es.head)))
-    ext.injectFunction(fn("graft_vec_dot", args = 2,
-      es => VecDot(es(0), es(1))))
-    ext.injectFunction(fn("graft_vec_norm2", args = 1,
-      es => VecNorm2(es.head)))
-    ext.injectFunction(fn("graft_hyperplane_sig", args = 2,
-      es => HyperplaneSig(es(0), es(1))))
-    ext.injectFunction(fn("graft_simhash_bands", args = 1,
-      es => SimHashBands(es.head)))
-    ext.injectFunction(fn("graft_checksum", args = 1,
-      es => ByteChecksum(es.head)))
-    ext.injectFunction(fn("graft_find_pattern", args = 2,
-      es => FindPattern(es(0), es(1))))
-    ext.injectFunction(fn("graft_bloom_agg", args = 3,
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(es(0), es(1), es(2))
-        .toAggregateExpression()))
-    ext.injectFunction(fn("graft_might_contain", args = 2,
-      es => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(es(0), es(1))))
+    descriptions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => GraftNopElimination)
     ext.injectOptimizerRule(_ => Base58LiteralRewrite)
     ext.injectOptimizerRule(_ => RangeJoinRewrite)
@@ -63,50 +28,47 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Register the graft functions on an already-running session (tests,
-    * notebooks); the extensions path covers cluster-configured sessions. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val fns = Seq(
-      fn("graft_base58", 1, (es: Seq[Expression]) => Base58Encode(es.head)),
-      fn("graft_unbase58", 1, (es: Seq[Expression]) => Base58Decode(es.head)),
-      fn("graft_le_long", 2, (es: Seq[Expression]) => LeLong(es(0), es(1))),
-      fn("graft_le_int", 2, (es: Seq[Expression]) => LeInt(es(0), es(1))),
-      fn("graft_le_bytes", 2, (es: Seq[Expression]) => LeBytes(es(0), es(1))),
-      fn("graft_le_u128", 2, (es: Seq[Expression]) => LeU128(es(0), es(1))),
-      fn("graft_rolling_min", 2,
-        (es: Seq[Expression]) => RollingHashMin(es(0), es(1))),
-      fn("graft_nop", 1, (es: Seq[Expression]) => GraftNop(es.head)),
-      fn("graft_trigrams", 1, (es: Seq[Expression]) => Trigrams(es.head)),
-      fn("graft_vec_dot", 2, (es: Seq[Expression]) => VecDot(es(0), es(1))),
-      fn("graft_vec_norm2", 1, (es: Seq[Expression]) => VecNorm2(es.head)),
-      fn("graft_hyperplane_sig", 2,
-        (es: Seq[Expression]) => HyperplaneSig(es(0), es(1))),
-      fn("graft_simhash_bands", 1,
-        (es: Seq[Expression]) => SimHashBands(es.head)),
-      fn("graft_checksum", 1, (es: Seq[Expression]) => ByteChecksum(es.head)),
-      fn("graft_find_pattern", 2,
-        (es: Seq[Expression]) => FindPattern(es(0), es(1))),
-      fn("graft_bloom_agg", 3,
-        (es: Seq[Expression]) => new org.apache.spark.sql.catalyst
-          .expressions.aggregate.BloomFilterAggregate(es(0), es(1), es(2))
-          .toAggregateExpression()),
-      fn("graft_might_contain", 2,
-        (es: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(es(0), es(1))))
-    fns.foreach { case (id, info, b) =>
-      org.apache.spark.sql.GraftBridge.registerFunction(spark, id.funcName, info, b)
-    }
-    org.apache.spark.sql.GraftBridge.addStrategy(spark, AsOfMergeStrategy)
-  }
+  /** Every graft_* SQL function as (name, arity, builder): the one
+    * table both the extensions path and [[register]] install. */
+  private val sqlFunctions: Seq[(String, Int, Seq[Expression] => Expression)] =
+    Seq(
+      ("graft_base58", 1, es => Base58Encode(es.head)),
+      ("graft_unbase58", 1, es => Base58Decode(es.head)),
+      ("graft_le_long", 2, es => LeLong(es(0), es(1))),
+      ("graft_le_int", 2, es => LeInt(es(0), es(1))),
+      ("graft_le_bytes", 2, es => LeBytes(es(0), es(1))),
+      ("graft_le_u128", 2, es => LeU128(es(0), es(1))),
+      ("graft_rolling_min", 2, es => RollingHashMin(es(0), es(1))),
+      ("graft_nop", 1, es => GraftNop(es.head)),
+      ("graft_trigrams", 1, es => Trigrams(es.head)),
+      ("graft_vec_dot", 2, es => VecDot(es(0), es(1))),
+      ("graft_vec_norm2", 1, es => VecNorm2(es.head)),
+      ("graft_hyperplane_sig", 2, es => HyperplaneSig(es(0), es(1))),
+      ("graft_simhash_bands", 1, es => SimHashBands(es.head)),
+      ("graft_checksum", 1, es => ByteChecksum(es.head)),
+      ("graft_find_pattern", 2, es => FindPattern(es(0), es(1))),
+      ("graft_bloom_agg", 3, es => new org.apache.spark.sql.catalyst
+        .expressions.aggregate.BloomFilterAggregate(es(0), es(1), es(2))
+        .toAggregateExpression()),
+      ("graft_might_contain", 2, es => org.apache.spark.sql.catalyst
+        .expressions.BloomFilterMightContain(es(0), es(1))))
 
-  private def fn(name: String, args: Int, build: Seq[Expression] => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = {
+  private def descriptions = sqlFunctions.map { case (name, args, build) =>
     val builder = (es: Seq[Expression]) => {
       require(es.length == args, s"$name expects $args arguments")
       build(es)
     }
     (FunctionIdentifier(name),
       new ExpressionInfo(classOf[GraftExtensions].getName, name), builder)
+  }
+
+  /** Register the graft functions on an already-running session (tests,
+    * notebooks); the extensions path covers cluster-configured sessions. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    descriptions.foreach { case (id, info, b) =>
+      org.apache.spark.sql.GraftBridge.registerFunction(spark, id.funcName, info, b)
+    }
+    org.apache.spark.sql.GraftBridge.addStrategy(spark, AsOfMergeStrategy)
   }
 
   /** Strips the graft_nop marker so it never reaches physical planning. */

@@ -34,12 +34,6 @@ object InstructionCodec {
   /** data blob: [8B disc][u64 event_id][u64 value_cents][u64 ts_us]. */
   private val MinLen = 32
 
-  /** 32-byte deterministic pubkey for a user id (same derivation the
-    * registry's b32 fields use). */
-  private def ukeyBytes(userCol: String) = expr(
-    s"unhex(concat(md5(cast(cast($userCol as string) as binary)), " +
-      s"md5(cast(cast($userCol + 1 as string) as binary))))")
-
   /** Pack the flat event table into nested transactions: 8 events per tx
     * (`event_id div 8`), the tx's account-key table = the distinct user
     * pubkeys sorted by user id, one instruction per event whose
@@ -53,7 +47,7 @@ object InstructionCodec {
       col("user_id"),
       expr("cast(round(value * 100, 0) as bigint)").as("value_cents"),
       expr("unix_micros(ts)").as("ts_us"),
-      ukeyBytes("user_id").as("ukey"))
+      graft.Tables.pubkey("user_id").as("ukey"))
     // per-tx account table, sorted by user id so indexes are deterministic
     val accounts = ev.groupBy("tx_id").agg(
       sort_array(collect_set(struct(col("user_id"), col("ukey"))))
@@ -95,7 +89,7 @@ object InstructionCodec {
     val ev = events.select(
       expr("event_id div 8").as("tx_id"), col("event_id"), col("user_id"),
       cents.as("cents"), expr("unix_micros(ts) div 1000000").as("ts_s"),
-      ukeyBytes("user_id").as("ukey"))
+      graft.Tables.pubkey("user_id").as("ukey"))
     val accounts = ev.groupBy("tx_id").agg(
       sort_array(collect_set(struct(col("user_id"), col("ukey"))))
         .as("acct"))

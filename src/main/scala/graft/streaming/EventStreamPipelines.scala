@@ -18,6 +18,34 @@ import org.apache.spark.sql.types.LongType
 object EventStreamPipelines {
   private val memCounter = new AtomicInteger(0)
 
+  /** Run `df` to completion under the availableNow trigger into a fresh
+    * memory-sink table and return that table — the one drain behind
+    * every availableNow oracle query. The memory sink collects to the
+    * driver, so it only takes results bounded well below driver heap;
+    * the session tables that outgrew it at sf100 drain into parquet
+    * instead ([[sessionNativeAvailableNow]],
+    * [[sessionTimeoutAvailableNow]]). */
+  private def drain(df: DataFrame, mode: OutputMode): DataFrame = {
+    val name = s"graft_stream_${memCounter.incrementAndGet()}"
+    df.writeStream.format("memory").queryName(name).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    df.sparkSession.table(name)
+  }
+
+  /** Run `body` on the RocksDB state store (transformWithState requires
+    * it), restoring the session's previous provider afterwards. */
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
+      ".RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   final case class SessionUpdate(
       user_id: Long, start_us: Long, end_us: Long, n_events: Int)
 
@@ -44,19 +72,11 @@ object EventStreamPipelines {
     */
   def windowedCountsAvailableNow(
       spark: SparkSession, dir: String, include: Seq[String]): DataFrame = {
-    val name = s"graft_stream_wc_${memCounter.incrementAndGet()}"
     val agg = eventsStream(spark, dir)
       .filter(col("event_type").isin(include: _*))
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .count()
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
       .select(expr("unix_timestamp(window.start)").as("ws"),
         col("event_type"), col("count").as("n"))
   }
@@ -191,21 +211,13 @@ object EventStreamPipelines {
     * DISTINCT, proving the streaming dedup semantics match the reference's
     * signature-cache dedup (`common/event_processor.rs`). */
   def dedupCountsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_dd_${memCounter.incrementAndGet()}"
     val deduped = eventsStream(spark, dir)
       .withColumn("minute_bucket", expr("unix_micros(ts) div 60000000"))
       .withWatermark("ts", "1 hour")
       .dropDuplicates("user_id", "event_type", "minute_bucket")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_distinct"))
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(deduped, OutputMode.Complete())
   }
 
   /** A16d: `dropDuplicatesWithinWatermark` — the OTHER streaming dedup
@@ -219,7 +231,6 @@ object EventStreamPipelines {
     * hash-oracle the semantics. */
   def dedupWithinWatermarkAvailableNow(
       spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_ddw_${memCounter.incrementAndGet()}"
     val deduped = eventsStream(spark, dir)
       .withColumn("minute_bucket", expr("unix_micros(ts) div 60000000"))
       .withWatermark("ts", "1 hour")
@@ -227,14 +238,7 @@ object EventStreamPipelines {
         "minute_bucket")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_distinct"))
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(deduped, OutputMode.Complete())
   }
 
   /** A35 (north-star composite): the reference's whole pipeline as one
@@ -248,7 +252,6 @@ object EventStreamPipelines {
   def wireDecodedCountsAvailableNow(
       spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.{EventCodec, wire}
-    val name = s"graft_wire_wc_${memCounter.incrementAndGet()}"
     val wireDir = s"${System.getProperty("java.io.tmpdir")}/graft_wire_s_" +
       Integer.toHexString(sfDir.hashCode)
     wire.GraftWireWriter.writeFrames(
@@ -259,13 +262,7 @@ object EventStreamPipelines {
       .withColumn("ws", expr("(ts_us div 3600000000) * 3600"))
       .groupBy(col("ws"), col("is_buy"))
       .agg(count(lit(1)).as("n"), sum("amount_cents").as("cents"))
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
   }
 
   /** A22 driven end to end: [[decodedTradeMetrics]] — the minute-
@@ -278,20 +275,13 @@ object EventStreamPipelines {
   def tradeMetricsAvailableNow(
       spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.{EventCodec, wire}
-    val name = s"graft_wire_tm_${memCounter.incrementAndGet()}"
     val wireDir = s"${System.getProperty("java.io.tmpdir")}/graft_wire_s_" +
       Integer.toHexString(sfDir.hashCode)
     wire.GraftWireWriter.writeFrames(
       EventCodec.encodeTrade(graft.Tables.events(spark, sfDir)), wireDir)
     val agg = decodedTradeMetrics(
       spark.readStream.format("graft-wire").load(wireDir))
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
   }
 
   /** A61/A63 streaming composite: the REAL-layout registry on a live
@@ -307,12 +297,10 @@ object EventStreamPipelines {
   def realDispatchAvailableNow(
       spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.{ProtocolRegistry, RealLayouts, wire}
-    val name = s"graft_wire_real_${memCounter.incrementAndGet()}"
+    import graft.Tables.pubkey
     val tmp = System.getProperty("java.io.tmpdir")
     val hex = Integer.toHexString(sfDir.hashCode)
     val ev = graft.Tables.events(spark, sfDir)
-    def mk(e: String) = expr(s"unhex(concat(md5(cast(cast($e as string) " +
-      s"as binary)), md5(cast(cast(($e) + 1 as string) as binary))))")
     val pfDir = s"$tmp/graft_wire_pf_$hex"
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "purchase").select(
@@ -328,13 +316,13 @@ object EventStreamPipelines {
         lit(0L).as("track_volume"), lit(0L).as("total_unclaimed_tokens"),
         lit(0L).as("total_claimed_tokens"), lit(0L).as("current_sol_volume"),
         lit(0L).as("last_update_timestamp"),
-        mk("user_id % 100").as("mint"), mk("user_id").as("user"),
-        mk("1").as("fee_recipient"), mk("2").as("creator")),
+        pubkey("user_id % 100").as("mint"), pubkey("user_id").as("user"),
+        pubkey("1").as("fee_recipient"), pubkey("2").as("creator")),
       RealLayouts.PumpFun.layouts(0)), pfDir)
     val bkDir = s"$tmp/graft_wire_bk_$hex"
     wire.GraftWireWriter.writeFrames(ProtocolRegistry.encode(
       ev.filter(col("event_type") === "view").select(
-        mk("user_id % 100").as("pool_state"),
+        pubkey("user_id % 100").as("pool_state"),
         (col("event_id") * 19).as("total_base_sell"),
         (col("event_id") * 3).as("virtual_base"),
         (col("event_id") * 5).as("virtual_quote"),
@@ -363,13 +351,7 @@ object EventStreamPipelines {
         sum(coalesce(col("pf_trade.sol_amount"),
           col("bonk_trade.amount_in"))).as("sum_amt"),
         sum(col("bonk_trade.trade_direction")).as("sum_dir"))
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
   }
 
   /** A43: stream-static broadcast enrichment — the live event feed joined
@@ -383,7 +365,6 @@ object EventStreamPipelines {
     * parity with the equivalent batch join (driver oracle-checks vs SQL).
     */
   def streamStaticEnrichment(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_se_${memCounter.incrementAndGet()}"
     val dim = graft.Tables.events(spark, dir)
       .groupBy("user_id")
       .agg(date_format(min(col("ts")), "yyyy-MM-dd").as("cohort_date"))
@@ -393,14 +374,7 @@ object EventStreamPipelines {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double")
           .as("total_value"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
   }
 
   /** A105b: STREAMING seasonal anomaly alerts — live hours scored
@@ -414,21 +388,13 @@ object EventStreamPipelines {
     */
   def seasonalAvailableNow(spark: SparkSession, dir: String,
       mult: Int = 2): DataFrame = {
-    val name = s"graft_stream_seasonal_${memCounter.incrementAndGet()}"
     import graft.operators.EventOps
     val baseline = EventOps.seasonalBaseline(
       EventOps.hourlyCounts(graft.Tables.events(spark, dir)))
     val agg = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("c"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
       .withColumn("hb", expr("unix_timestamp(window.start) div 3600"))
       .withColumn("hod", expr("hb % 24"))
       .join(broadcast(baseline), Seq("event_type", "hod"))
@@ -444,7 +410,6 @@ object EventStreamPipelines {
     * run proves exact parity with the batch OHLC oracle.
     */
   def ohlcAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_ohlc_${memCounter.incrementAndGet()}"
     val agg = eventsStream(spark, dir)
       .select(col("event_type"), col("ts"), col("event_id"),
         col("value").cast("decimal(18,2)").as("v"))
@@ -454,14 +419,7 @@ object EventStreamPipelines {
         max_by(col("v"), struct(col("ts"), col("event_id"))).as("close_d"),
         max("v").as("high_d"), min("v").as("low_d"),
         count(lit(1)).as("n"), sum("v").as("volume_d"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(agg, OutputMode.Complete())
       .select(expr("unix_timestamp(window.start)").as("hb"),
         col("event_type"),
         col("open_d").cast("double").as("open"),
@@ -520,7 +478,6 @@ object EventStreamPipelines {
     */
   def streamStreamAttribution(
       spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_ss_join_${memCounter.incrementAndGet()}"
     val purchases = eventsStream(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("pts"), col("event_id"))
@@ -531,13 +488,7 @@ object EventStreamPipelines {
       .withWatermark("sts", "1 hour")
     val joined = purchases.join(signups,
       expr("user_id = s_user AND pts >= sts AND pts <= sts + interval 1 hour"))
-    val q = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(joined, OutputMode.Append())
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_attributed"))
   }
@@ -588,15 +539,8 @@ object EventStreamPipelines {
     * a DuckDB hash check instead of only a spec. */
   def sessionClosuresAvailableNow(
       spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_sc_${memCounter.incrementAndGet()}"
-    val q = sessionClosuresStream(eventsStream(spark, dir)).toDF()
-      .writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(sessionClosuresStream(eventsStream(spark, dir)).toDF(),
+        OutputMode.Append())
       .select(col("user_id"), col("start_us"), col("end_us"),
         col("n_events").cast("long").as("n_events"))
   }
@@ -611,7 +555,6 @@ object EventStreamPipelines {
     * reference signature-cache contract (`event_processor.rs` dedup)
     * as an oracle-checkable equation. */
   def dedupReplayAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_ddr_${memCounter.incrementAndGet()}"
     // createTempDirectory, NOT tmpdir + a per-JVM counter: two
     // concurrent harness JVMs restart the counter at the same value,
     // so counter paths collide — one JVM then appends a SECOND pair of
@@ -648,13 +591,7 @@ object EventStreamPipelines {
     val counts = dedupStream(src)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table(name).localCheckpoint(eager = true)
+    val out = drain(counts, OutputMode.Complete()).localCheckpoint(eager = true)
     scala.util.Try(org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(inc)))
     out
@@ -839,30 +776,10 @@ object EventStreamPipelines {
   }
 
   /** A94b availableNow harness (oracle ≡ EventOps.cusumFixed's SQL). */
-  def cusumAlarmsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_cusum_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = cusumAlarmStream(eventsStream(spark, dir)).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
+  def cusumAlarmsAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    withRocksDb(spark) {
+      drain(cusumAlarmStream(eventsStream(spark, dir)), OutputMode.Append())
     }
-    spark.table(name)
-  }
 
   /** A17f driver: decoded trades → per-sell integer PnL rows. */
   def realizedPnlStream(events: DataFrame,
@@ -939,12 +856,7 @@ object EventStreamPipelines {
     * whole MapState read-modify-write path against that SQL. */
   def typeCountsAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_tc_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val out = eventsStream(spark, dir)
         .select(col("user_id").cast("long"), col("event_type"))
         .as[(Long, String)]
@@ -953,23 +865,8 @@ object EventStreamPipelines {
           OutputMode.Update(),
           org.apache.spark.sql.Encoders.product[(Long, String, Long)])
         .toDF("user_id", "event_type", "n")
-      val q = out.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-    spark.table(name)
-      .groupBy("user_id", "event_type").agg(max("n").as("n"))
+      drain(out, OutputMode.Update())
+    }.groupBy("user_id", "event_type").agg(max("n").as("n"))
   }
 
   /** A17d, event-time-ordered: the bounded recent-trades ring with the
@@ -1020,12 +917,7 @@ object EventStreamPipelines {
   def recentTradesAvailableNow(spark: SparkSession, dir: String,
       keep: Int = 5): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_rt_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    val snapshots = withRocksDb(spark) {
       val out = eventsStream(spark, dir)
         .select(col("user_id").cast("long"),
           expr("unix_micros(ts)").as("ts_us"),
@@ -1037,26 +929,13 @@ object EventStreamPipelines {
           TimeMode.None(), OutputMode.Append(),
           org.apache.spark.sql.Encoders.product[(Long, Int, Long, Long)])
         .toDF("user_id", "n_recent", "recent_cents", "seq")
-      val q = out.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
+      drain(out, OutputMode.Append())
     }
     // keep each wallet's FINAL snapshot: Append mode leaves one row per
     // (key, micro-batch) in the sink, so a multi-batch availableNow run
     // (several source files / low maxFilesPerTrigger) would otherwise
     // surface stale earlier snapshots alongside the final one
-    spark.table(name)
+    snapshots
       .groupBy("user_id")
       .agg(max(struct(col("seq"), col("n_recent"), col("recent_cents")))
         .as("fin"))
@@ -1151,10 +1030,6 @@ object EventStreamPipelines {
   def sessionTimeoutAvailableNow(spark: SparkSession, dir: String,
       gapMinutes: Int = 30,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Append-mode output goes to the native parquet file sink (append
     // is exactly what the file sink supports): emitted sessions land as
     // executor-written parquet instead of accumulating in a driver-heap
@@ -1165,8 +1040,8 @@ object EventStreamPipelines {
       .createTempDirectory("graft_timer_sink").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_timer_ckpt").toString
-    try {
-      val q = sessionTimeoutStream(
+    withRocksDb(spark) {
+      sessionTimeoutStream(
         eventsStream(spark, dir), gapMinutes, watermarkDelay).writeStream
         .format("parquet")
         .option("path", sinkDir)
@@ -1174,14 +1049,7 @@ object EventStreamPipelines {
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
+        .awaitTermination()
     }
     spark.read.parquet(sinkDir)
       .select(col("user_id"), col("start_us"), col("end_us"),
@@ -1210,34 +1078,13 @@ object EventStreamPipelines {
     * to completion (RocksDB state store — required by transformWithState)
     * and keep each wallet's final state, which must equal the batch
     * count/sum — the driver oracle-checks it against plain SQL. */
-  def walletVolumeAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_tws_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = walletVolumeStream(eventsStream(spark, dir)).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-    spark.table(name)
-      .groupBy("user_id")
+  def walletVolumeAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    withRocksDb(spark) {
+      drain(walletVolumeStream(eventsStream(spark, dir)), OutputMode.Update())
+    }.groupBy("user_id")
       .agg(max(struct(col("n_events"), col("cents"))).as("fin"))
       .select(col("user_id"), col("fin.n_events").as("n_events"),
         col("fin.cents").as("cents"))
-  }
 
   /** A17f driver surface: the streaming realized-PnL processor run to
     * completion with availableNow over the events table, finished with
@@ -1249,31 +1096,11 @@ object EventStreamPipelines {
     * pins equality through multi-batch in-order replay). Same wallet
     * decimation as the batch query so both feed one oracle. */
   def realizedPnlAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_pnl_${memCounter.incrementAndGet()}"
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val marks = realizedPnlStream(
         eventsStream(spark, dir).filter(col("user_id") % 10 === 0))
-      val q = marks.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-    spark.table(name)
-      .select(col("user_id"), col("event_id"), col("sell_cents"),
+      drain(marks, OutputMode.Append())
+    }.select(col("user_id"), col("event_id"), col("sell_cents"),
         col("cum_buy_cents"), col("cum_buy_n"),
         when(col("cum_buy_n") > 0,
           col("sell_cents").cast("double") -
@@ -1295,7 +1122,6 @@ object EventStreamPipelines {
     * spec-only existence proof. */
   def sessionLegacyAvailableNow(spark: SparkSession, dir: String,
       gapMinutes: Int = 30): DataFrame = {
-    val name = s"graft_stream_ssl_${memCounter.incrementAndGet()}"
     val inc = java.nio.file.Files.createTempDirectory("graft_ssl_")
       .toString
     val ev = graft.Tables.events(spark, dir)
@@ -1323,13 +1149,7 @@ object EventStreamPipelines {
       .schema(spark.read.parquet(inc).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(inc))
-    val q = sessionStream(src, gapMinutes).toDF().writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table(name)
+    val out = drain(sessionStream(src, gapMinutes).toDF(), OutputMode.Update())
       .groupBy("user_id")
       .agg(max(struct(col("end_us"), col("start_us"), col("n_events")))
         .as("s"))

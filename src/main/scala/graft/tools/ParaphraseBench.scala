@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -66,16 +66,8 @@ object ParaphraseBench {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val variants = if (args.length > 1) args(1).toInt else 10
     val outJson = if (args.length > 2) args(2) else "BENCH_PARA.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Graft.cpus
+    val spark = graft.Graft.harness(cpus)
 
     // per-run scratch root: fixed /tmp paths let concurrent or stale
     // runs clobber each other's corpora and silently skew the
@@ -84,7 +76,7 @@ object ParaphraseBench {
       .toString
     val corpusPath = s"$scratch/corpus"
     paraphraseCorpus(graft.Tables.documents(spark, srcDir), variants)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(corpusPath)
     val docs = spark.read.parquet(corpusPath)
     val nDocs = docs.count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan capture for the optimization-round evidence trail: writes
   * `.explain("formatted")` of each named query to `<outDir>/<name>_<suffix>.txt`
   * so before/after plan diffs are committable artifacts.
@@ -18,15 +16,7 @@ object PlanDump {
       if (args(2) == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Graft.harness()
     // SPARK_GRAFT_PLANCONF="k=v,k=v": session confs to apply before the
     // plan builds — lets a dump capture a size-gated regime (e.g. the
     // washPairs mask path) that the tiny default sfDir would not trip

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Runs named registered queries and prints row counts + a sample —
   * the fast "does this new query return sane rows" probe before the
   * full Verify gate. Usage: `runMain graft.tools.RunQ q_a q_b [--show]`
@@ -13,15 +11,7 @@ object RunQ {
     val names = args.filterNot(_.startsWith("--"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Graft.harness()
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       println(s"[runq] $name rows=${df.count()}")

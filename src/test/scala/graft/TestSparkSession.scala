@@ -12,17 +12,10 @@ trait TestSparkSession extends AnyFunSuite with BeforeAndAfterAll {
 
 object TestSparkSession {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = Graft.harness(4)
     s.sparkContext.setLogLevel("ERROR")
     // SQL-name registration must not depend on which suite runs first
-    graft.plans.GraftExtensions.register(s)
+    Graft.attach(s)
     s
   }
 }
